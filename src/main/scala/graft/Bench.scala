@@ -105,33 +105,29 @@ object Bench {
     // at arbitrary sfDirs, so diffing them against the committed
     // full-suite sf0.1 map compares across scale factors — a bogus
     // flag that also CLOBBERED the durable regression file (caught
-    // round 11 when an sf10 ladder run left an 11× "regression")
-    val regressions = if (only.nonEmpty) Nil else try {
+    // round 11 when an sf10 ladder run left an 11× "regression").
+    val prev: Option[String] = if (only.nonEmpty) None else try {
       val p = java.nio.file.Paths.get("bench.json")
-      if (!java.nio.file.Files.exists(p)) Nil else {
-        val prev = new String(java.nio.file.Files.readAllBytes(p), "UTF-8")
-        val qStart = prev.indexOf("\"queries\":{")
-        if (qStart < 0) Nil else {
-          val body = prev.substring(qStart + 11, prev.indexOf("}", qStart))
-          val re = "\"([A-Za-z0-9_]+)\":([0-9.eE+-]+)".r
-          val prevMap = re.findAllMatchIn(body)
-            .map(m => m.group(1) -> m.group(2).toDouble).toMap
-          ok.flatMap { case (k, v) =>
-            prevMap.get(k).filter(pv => v > pv * 1.5 && v - pv > 0.25)
-              .map(pv => (k, pv, v))
-          }.sortBy { case (_, pv, v) => -(v / pv) }
+      if (!java.nio.file.Files.exists(p)) None
+      else Some(new String(java.nio.file.Files.readAllBytes(p), "UTF-8"))
+    } catch { case _: Throwable => None }
+    val gate = regressionGate(prev, ok, cpus)
+    if (only.isEmpty) {
+      gate match {
+        case Left(why) =>
+          System.err.println(s"[bench] regression gate: $why, not compared")
+        case Right(Nil) =>
+          System.err.println("[bench] regression gate: no query >1.5x over previous bench.json")
+        case Right(regressions) => regressions.foreach { case (k, pv, v) =>
+          System.err.println(f"[bench] REGRESSION $k%-28s $pv%.2f -> $v%.2f s (${v / pv}%.1fx)")
         }
       }
-    } catch { case _: Throwable => Nil }
-    if (only.isEmpty) {
-      if (regressions.isEmpty)
-        System.err.println("[bench] regression gate: no query >1.5x over previous bench.json")
-      else regressions.foreach { case (k, pv, v) =>
-        System.err.println(f"[bench] REGRESSION $k%-28s $pv%.2f -> $v%.2f s (${v / pv}%.1fx)")
-      }
       try {
-        val rj = regressions.map { case (k, pv, v) =>
-          s"""{"query":"$k","prev":$pv,"now":$v}""" }.mkString("[", ",", "]")
+        val rj = gate match {
+          case Left(why) => s"""{"compared":false,"reason":"$why"}"""
+          case Right(regressions) => regressions.map { case (k, pv, v) =>
+            s"""{"query":"$k","prev":$pv,"now":$v}""" }.mkString("[", ",", "]")
+        }
         java.nio.file.Files.write(java.nio.file.Paths.get("bench_regressions.json"),
           (rj + "\n").getBytes("UTF-8"))
       } catch { case _: Throwable => }
@@ -142,13 +138,47 @@ object Bench {
     // also lands in bench.json at the repo root. SUBSET runs (local
     // iteration) skip the write: a 5-query map must never clobber the
     // committed full-suite map the regression gate diffs against.
+    // The copy also records `cpus`, the posture the gate compares on;
+    // the stdout line stays as it is.
     println(line)
     if (only.isEmpty) try {
       val out = java.nio.file.Paths.get("bench.json")
-      java.nio.file.Files.write(out, (line + "\n").getBytes("UTF-8"))
+      val durable = line.dropRight(1) + s""","cpus":"$cpus"}"""
+      java.nio.file.Files.write(out, (durable + "\n").getBytes("UTF-8"))
     } catch { case e: Throwable =>
       System.err.println(s"[bench] bench.json write failed: ${e.getMessage}")
     }
     spark.stop()
   }
+
+  /** The per-query regression gate against the previous bench.json
+    * line: queries >1.5× slower and >0.25 s slower in absolute terms
+    * (the noise floor), worst ratio first. `Left` when there is nothing
+    * to compare against on the same posture: a previous file that
+    * records no `cpus`, or a different one (an 8-core run diffed
+    * against 32-core numbers flags the box, not the code). */
+  private[graft] def regressionGate(prev: Option[String], now: Seq[(String, Double)],
+                                    cpus: String): Either[String, Seq[(String, Double, Double)]] =
+    prev match {
+      case None => Right(Nil)
+      case Some(prevLine) =>
+        val prevCpus = "\"cpus\":\"?([^,}\"]+)".r.findFirstMatchIn(prevLine).map(_.group(1))
+        if (!prevCpus.contains(cpus))
+          Left(s"posture differs (previous bench.json cpus=${prevCpus.getOrElse("unrecorded")}, " +
+            s"this run cpus=$cpus)")
+        else {
+          val qStart = prevLine.indexOf("\"queries\":{")
+          val qEnd = if (qStart < 0) -1 else prevLine.indexOf("}", qStart)
+          if (qEnd < 0) Right(Nil) else {
+            val body = prevLine.substring(qStart + 11, qEnd)
+            val re = "\"([A-Za-z0-9_]+)\":([0-9.eE+-]+)".r
+            val prevMap = re.findAllMatchIn(body)
+              .map(m => m.group(1) -> m.group(2).toDouble).toMap
+            Right(now.flatMap { case (k, v) =>
+              prevMap.get(k).filter(pv => v > pv * 1.5 && v - pv > 0.25)
+                .map(pv => (k, pv, v))
+            }.sortBy { case (_, pv, v) => -(v / pv) })
+          }
+        }
+    }
 }

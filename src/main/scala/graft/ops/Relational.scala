@@ -78,8 +78,9 @@ object Relational {
   /** Sink roundtrip: write a table to parquet, read it back. */
   def qSinkParquet(s: SparkSession, sf: String): DataFrame = {
     val dir = Util.sinkDir("nation", sf)
-    Tables.nation(s, sf).write.mode("overwrite").parquet(dir)
-    s.read.parquet(dir).orderBy("n_nationkey")
+    val nation = Tables.nation(s, sf)
+    nation.write.mode("overwrite").parquet(dir)
+    Util.readBack(s, nation, dir).orderBy("n_nationkey")
   }
 
   /** Hive-style partitioned sink + partition-pruned read-back: the
@@ -152,11 +153,11 @@ object Relational {
     val compact = s"$base/events_compacted"
     val e = Tables.events(s, sf).select("event_id", "event_type", "value")
     e.repartition(64).write.mode("overwrite").parquet(frag)
-    s.read.parquet(frag).coalesce(4).write.mode("overwrite").parquet(compact)
+    Util.readBack(s, e, frag).coalesce(4).write.mode("overwrite").parquet(compact)
     def nFiles(dir: String): Long =
       Option(new java.io.File(dir).listFiles()).getOrElse(Array.empty)
         .count(f => f.getName.endsWith(".parquet")).toLong
-    s.read.parquet(compact)
+    Util.readBack(s, e, compact)
       .groupBy(col("event_type"))
       .agg(count(lit(1)).as("n_events"), dsum(col("value")).as("sum_value"))
       .withColumn("n_files_before", lit(nFiles(frag)))
@@ -486,7 +487,7 @@ object Relational {
       max(expr("unix_micros(ts) div 86400000000"))).head()
     val (uLo, uSpan) = (st.getLong(0), math.max(1L, st.getLong(1) - st.getLong(0)))
     val (dLo, dSpan) = (st.getLong(2), math.max(1L, st.getLong(3) - st.getLong(2)))
-    ev
+    val clustered = ev
       .withColumn("u16", expr(s"((user_id - $uLo) * 65535) div $uSpan"))
       .withColumn("d16",
         expr(s"(((unix_micros(ts) div 86400000000) - $dLo) * 65535) div $dSpan"))
@@ -495,8 +496,8 @@ object Relational {
       .repartitionByRange(16, col("z"))
       .sortWithinPartitions("z")
       .drop("z")
-      .write.mode("overwrite").parquet(dir)
-    s.read.parquet(dir)
+    clustered.write.mode("overwrite").parquet(dir)
+    Util.readBack(s, clustered, dir)
       .where(col("ts") >= lit("2024-01-11").cast("timestamp") &&
              col("ts") < lit("2024-01-21").cast("timestamp"))
       .groupBy(col("event_type"))
@@ -898,10 +899,10 @@ object Relational {
       .agg(count(lit(1)).as("n_events"),
            sum(col("value").cast(Util.D)).as("sum_dec"))
     // phase 1: the standing rollup (everything before the new day)
-    partial(withMax.where(col("day") < col("maxd")))
-      .write.mode("overwrite").parquet(dir)
+    val standing = partial(withMax.where(col("day") < col("maxd")))
+    standing.write.mode("overwrite").parquet(dir)
     // phase 2: merge ONE new day's partial into the stored rollup
-    val stored = s.read.parquet(dir)
+    val stored = Util.readBack(s, standing, dir)
     val newDay = partial(withMax.where(col("day") === col("maxd")))
     stored.unionByName(newDay)
       .groupBy(col("event_type"), col("day"))

@@ -375,39 +375,20 @@ object TextDedup {
     * alone, so docs with an identical set (the fixture corpus averages
     * ~10 exact/shuffled dups per set; real crawl corpora behave the
     * same) need any similarity computed only once — this builder is
-    * the shared CANONICALIZE phase: per doc, the distinct w-gram hash
-    * set `ft` (sorted array<long>) and a 64-bit set id over (lang, ft).
+    * the shared CANONICALIZE phase over [[gramSetDocs]]: per doc, the
+    * distinct feature set `ft` as an array of STRINGS and a 64-bit set
+    * id over (lang, sorted ft). Extraction is a keyless round-robin
+    * `repartition(p)` (the fixture table is one parquet file) and
+    * drops no row: a doc with fewer than w tokens keeps its EMPTY set,
+    * explodes to zero postings in [[bandedJaccardPairs]], and so can
+    * never pair under τ > 0. Features are hashed to longs only after
+    * that posting explode.
     *
-    * Round 14 (§1.2 per-task work + §2.3 shuffle fewer bytes): the
-    * feature array was built per doc with a per-element `transform()`
-    * lambda — INTERPRETED (the round-13 fingerprint hazard, measured 5×
-    * there) — and carried gram STRINGS through two exchanges and the
-    * reps groupBy. Features are now extracted as GRAM ROWS (codegen
-    * `explode(sequence)` + `slice` + `xxhash64`, the docGrams8 shape)
-    * and hashed to 8-byte longs AT EXTRACTION, so the per-doc set
-    * rebuild (`collect_set`), the set sort, the setid hash, and every
-    * downstream exchange operate on longs, never gram strings. The
-    * repartition(p, doc_id) parallelizes the one-file fixture scan
-    * (deterministic hash key per the §2.5 retry rule) AND makes the
-    * per-doc collect_set exchange-free (hashpartitioning(doc_id)
-    * satisfies the groupBy's clustering). A 64-bit collision could
-    * perturb one set's cardinality or one Jaccard value with
-    * probability ~|vocab|²/2⁶⁴ ≈ 1e-8 — the same envelope round 12
-    * accepted when it hashed the posting keys; the oracle gate
-    * re-proves the fixture outputs bit-exact.
-    *
-    * lang folds into the set identity AND stays a posting join key:
-    * the corpus' common tokens ("the", "a", ...) appear in nearly
-    * every set, and an unblocked posting group over them pairs ALL
-    * representatives — lang-blocking cuts those groups 5x (25x fewer
-    * joined rows). Docs with fewer than w tokens have an EMPTY feature
-    * set (the pre-rewrite `otherwise(array())` guard): they can never
-    * pair under τ > 0, so dropping their rows at extraction is
-    * result-identical.
-    *
-    * reps carries the per-set n_chars interval: a set pair whose member
-    * char ranges sit > 25 apart cannot produce any doc pair passing
-    * |dChars| <= 25 — exact interval-distance pruning at the rep level. */
+    * members is the doc→set map (setid, doc_id, lang, n_chars); reps
+    * has one row per distinct set ([[gramSetReps]]) and carries the
+    * per-set n_chars interval: a set pair whose member char ranges sit
+    * > 25 apart cannot produce any doc pair passing |dChars| <= 25 —
+    * exact interval-distance pruning at the rep level. */
   private def gramSetFrames(s: SparkSession, docs: DataFrame,
                             features: Column): (DataFrame, DataFrame) = {
     val d = gramSetDocs(s, docs, features)
@@ -701,7 +682,7 @@ object TextDedup {
     * lookalikes score ≤ 0.1 while true duplicates score 1.0, so shingle
     * Jaccard separates them cleanly. Same (lang, length-band) blocking
     * and bucket-and-replicate join as q_dedup_jaccard, over w=2 gram
-    * sets ([[gramSetFrames]] — codegen extraction, hashed features). */
+    * sets ([[gramSetFrames]]). */
   def qDedupNgram(s: SparkSession, sf: String): DataFrame = {
     val tk = split(col("text"), " ")
     // guard the 1-token doc: sequence(0, -1) would count DOWN in Spark

@@ -342,6 +342,16 @@ object Util {
   def sinkDir(sub: String, sf: String): String =
     s"$scratchRoot/${sub}_" + sf.replaceAll("[^a-zA-Z0-9.]", "_")
 
+  /** Read back an UNPARTITIONED parquet dir just written from
+    * `written`. Spark keeps the written types and field metadata in
+    * the footer and reads every file column as nullable either way, so
+    * the written schema is what inference would return — passing it
+    * skips the one-task footer-inference job. Partitioned,
+    * `mergeSchema` and `ignoreCorruptFiles` read-backs keep inference:
+    * there the files, not the writer, define the schema. */
+  def readBack(s: SparkSession, written: DataFrame, dir: String): DataFrame =
+    s.read.schema(written.schema).parquet(dir)
+
   /** Drop session-keyed cache entries whose SparkSession has stopped —
     * the shared eviction rule for every (SparkSession, sfDir)-keyed
     * derive-once cache (token counts, pair graph, PQ model, …).

@@ -437,7 +437,9 @@ object StreamOps {
       })
       val buf = new Array[Long](15)
       var n = 0
-      st.buf.foreach { v => buf(n) = v; n += 1 } // ≤ 15 by invariant
+      // takeRight: an oversized restored state (a checkpoint from a
+      // buggy or future writer) keeps its last 15 values, never overflows
+      st.buf.takeRight(15).foreach { v => buf(n) = v; n += 1 }
       var i = 0
       while (i < arr.length) {
         val e = arr(i)

@@ -4,9 +4,18 @@ import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Shared local session for all suites (one JVM-wide session — Spark
-  * sessions are expensive; suites must not stop() it). */
+  * sessions are expensive; suites must not stop() it). The one
+  * exception is TablesSpec's stopped-session eviction test, so a
+  * stopped session is rebuilt here with the same confs. */
 object SparkSpec {
-  lazy val session: SparkSession = {
+  private var current: SparkSession = _
+
+  def session: SparkSession = synchronized {
+    if (current == null || current.sparkContext.isStopped) current = build()
+    current
+  }
+
+  private def build(): SparkSession = {
     val s = SparkSession.builder()
       .master("local[4]")
       .appName("graft-test")
